@@ -1,148 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** No args (the driver's call): run every query. With args: run only
     * those keys — local iteration aid. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Deployment tuning for this host (single node, 128 GiB): let
-      // AQE/planner broadcast mid-size join sides; at cluster scale
-      // this knob is sized per-executor instead.
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // AQE OFF for the bench tier — measured, not guessed: each AQE
-      // query-stage barrier costs 50-200 ms of driver replanning, and
-      // at the bench's MB scale that overhead dominates (113-query
-      // total 86.5 s -> 78.4 s when disabled; dedup_cluster_cc's
-      // 15-stage iterative plan alone 7.2 s -> 5.3 s). On a real
-      // cluster at TB scale flip this ON (one conf): skew-join splits
-      // and runtime SMJ->BHJ re-selection then pay for the barriers.
-      // The plans themselves don't depend on it — broadcasts and
-      // partitioning are explicit in every graded query.
-      .config("spark.sql.adaptive.enabled", "false")
-      // Session-timezone parity with Verify/Explain (ADVICE r10): the
-      // events reader's TimestampNTZ cast is session-tz-dependent, so
-      // an unpinned bench on a non-UTC host would time different
-      // session/window/date_trunc groupings than the plans the hash
-      // gate certifies.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        graft.TempDirs.create("graft-warehouse"))
-      .config("spark.ui.enabled", "false")
-    // experiment hook: SPARK_GRAFT_CONF="k=v,k=v" overrides any conf
-    // (shared with Verify/Explain — HarnessConf, ADVICE r7).
-    val spark = HarnessConf.applyEnv(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: JVM/codegen/vectorized-reader/broadcast/window/Generate
-    // classloading costs otherwise land on whichever query happens to
-    // run first. Exercises each machinery once on the 25-row dims.
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
-      n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy("r_name")
-        .agg(sum(col("n_nationkey").cast("decimal(12,2)")).as("s"),
-          collect_list(col("n_name")).as("l"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("r_name").orderBy("s")))
-        .orderBy("r_name").count()
-      // Generate (index-explode), ObjectHashAggregate (collect_list of
-      // longs), BroadcastNestedLoopJoin (1-row crossJoin), persist +
-      // unpersist, and the custom codegen expressions — the first-use
-      // costs the dedup/similarity queries otherwise pay in-timing.
-      val toks = n.repartition(4)
-        .select(col("n_nationkey"), split(col("n_name"), "").as("t"))
-        .filter(size(col("t")) >= 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sorted = toks.select(col("n_nationkey"), sort_array(array_distinct(expr(
-        "transform(sequence(3, size(t)), i -> xxhash64(concat_ws(' ', t[i-3], t[i-2], t[i-1])))")))
-        .as("sh"))
-      val one = toks
-        .select(col("t"), explode(expr("sequence(3, size(t))")).as("i"))
-        .select(xxhash64(concat_ws(" ",
-          expr("t[i-3]"), expr("t[i-2]"), expr("t[i-1]"))).as("h"))
-        .distinct()
-        .agg(sort_array(collect_list(col("h"))).as("arr"))
-      sorted.crossJoin(broadcast(one))
-        .select(graft.functions.VectorFunctions
-          .sortedIntersectLong(col("sh"), col("arr")).as("x"))
-        .agg(sum(col("x"))).count()
-      // Minhash machinery (md5-transform signatures, band posexplode,
-      // string-array merge-walk) and the RDD re-rooting bridge used by
-      // the iterative CC loop — first-use codegen/classloading for
-      // these otherwise lands inside whichever dedup query runs first.
-      val sigs = toks
-        .select(col("n_nationkey"), sort_array(array_distinct(expr(
-          "transform(sequence(3, size(t)), i -> concat_ws(' ', t[i-3], t[i-2], t[i-1]))")))
-          .as("s"))
-        .select(col("n_nationkey"), col("s"),
-          expr("transform(s, x -> md5(x))").as("hs"))
-        .select(col("n_nationkey"), col("s"),
-          expr("array_min(transform(hs, h -> substring(h, 1, 8)))").as("h0"),
-          expr("array_min(transform(hs, h -> substring(h, 4, 8)))").as("h1"))
-      val bands = sigs.select(col("n_nationkey"), col("s"),
-        posexplode(array(concat_ws("|", col("h0"), col("h1"))))
-          .as(Seq("band", "sig")))
-      val pairs = bands.as("x").join(bands.as("y"),
-          col("x.sig") === col("y.sig") &&
-            col("x.n_nationkey") < col("y.n_nationkey"))
-        .select(graft.functions.VectorFunctions
-          .sortedIntersect(col("x.s"), col("y.s")).as("n"))
-      val flat = spark.createDataFrame(pairs.rdd, pairs.schema)
-      flat.groupBy(col("n")).agg(min(col("n"))).count()
-      toks.unpersist()
-      // Sink machinery (r5 graded layouts): catalog + bucketed
-      // saveAsTable, partitionBy and repartitionByRange parquet
-      // writes, CSV write/read — first-use committer/catalog
-      // classloading otherwise lands inside the graded sink queries.
-      val wdir = graft.TempDirs.create("graft-warm")
-      n.select(col("n_nationkey"), col("n_name"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(2, "n_nationkey").sortBy("n_nationkey")
-        .saveAsTable("graft_warm_bucketed")
-      spark.table("graft_warm_bucketed").count()
-      spark.sql("DROP TABLE IF EXISTS graft_warm_bucketed")
-      n.write.mode("overwrite").partitionBy("n_regionkey").parquet(s"$wdir/p")
-      spark.read.parquet(s"$wdir/p").filter(col("n_regionkey") === 0).count()
-      n.repartitionByRange(2, col("n_nationkey"))
-        .sortWithinPartitions(col("n_nationkey"))
-        .write.mode("overwrite").parquet(s"$wdir/r")
-      n.write.mode("overwrite").option("header", "true").csv(s"$wdir/c")
-      spark.read.option("header", "true")
-        .schema("n_nationkey LONG, n_name STRING, n_regionkey INT")
-        .csv(s"$wdir/c").count()
-      // r6 additions, each measured as a 1.4-1.8 s first-use cost that
-      // previously landed inside whichever graded query ran it first:
-      // - LocalRelation (Seq.toDF) -> broadcast join: 1.8 s, was paid
-      //   by harmonize_cube (first sorted query joining a local dim);
-      // - the custom GroupedTopKExec: 1.4 s, was paid by
-      //   text_tfidf_topterms (sorts before topk_per_group);
-      // - full-outer SMJ + max(struct) aggregate: first-use machinery
-      //   for the evolution family (merge_upsert/cdc_apply).
-      import spark.implicits._
-      val dim = Seq((0L, "a", "x"), (1L, "b", "y"))
-        .toDF("k", "v", "w")
-      n.join(broadcast(dim), n("n_nationkey") === dim("k"), "left").count()
-      graft.plans.GroupedTopK.topkPerGroup(
-        n.select(col("n_regionkey"), col("n_nationkey"),
-          col("n_nationkey").cast("double").as("s")),
-        groupCols = Seq("n_regionkey"),
-        orderBy = Seq(("s", false), ("n_nationkey", true)), k = 1).count()
-      n.as("a").hint("merge").join(n.as("b"),
-          col("a.n_nationkey") === col("b.n_nationkey"), "full")
-        .select(coalesce(col("a.n_nationkey"), col("b.n_nationkey")).as("k"))
-        .count()
-      n.groupBy(col("n_regionkey"))
-        .agg(max(struct(col("n_nationkey"), col("n_name"))).as("v"))
-        .count()
-      spark.catalog.clearCache()
-    }
+    val cpus = HarnessConf.cpus
+    // The one harness regime (AQE off, 64m broadcasts, UTC, graft
+    // extensions, SPARK_GRAFT_CONF overrides last) — the same session
+    // Verify's hash gate and Explain's plan dumps run under.
+    val spark = HarnessConf.session(cpus)
     // Sorted execution order: a HashMap's iteration order reshuffles
     // whenever a key is added, which made round-over-round per-query
     // numbers incomparable (a query's timing depends on which heavy
@@ -150,25 +16,12 @@ object Bench {
     val selected = (if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap)
       .toSeq.sortBy(_._1)
-    // Per-query shape warm-up (r6): each query's first run pays
-    // 0.3-1.6 s of Janino compilation for its generated classes —
-    // measured per plan SHAPE, not per data size (a 25-row run of the
-    // same shape absorbs the whole cost; see PLANS.md r6). The codegen
-    // cache is keyed on generated source, which is independent of the
-    // parquet path — so one pass over the 1k-row sf0.001 tables
-    // compiles every class outside the timed region. This is machine
-    // warm-up (JIT state), not result caching: clearCache() drops any
-    // data the pass may have pinned.
     // Per-key shuffle-partition presizing (PartitionPolicy): applied
-    // in BOTH the warm-up and the timed loop so the warmed plan is the
-    // timed plan. An explicit shuffle.partitions in SPARK_GRAFT_CONF
-    // disables it — that env hook exists precisely for global sweeps,
-    // which the per-key policy would silently defeat.
+    // in BOTH the warm schedule and the timed loop so the warmed plan
+    // is the timed plan. An explicit shuffle.partitions in
+    // SPARK_GRAFT_CONF disables it (HarnessConf.applyPolicy).
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val policyActive = HarnessConf.policyActive
-    def applyPolicy(key: String): Unit = if (policyActive)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        PartitionPolicy.forKey(key, sessionParts).toString)
+    def applyPolicy(key: String): Unit = HarnessConf.applyPolicy(spark, key, sessionParts)
     // Warm SCHEDULE, not a single pass (r11): one sf0.001 pass
     // compiles the Janino classes but leaves C2 JIT to fire
     // mid-timing — back-edge counters only cross the compile
@@ -186,31 +39,14 @@ object Bench {
     // in-timed JIT 2782 -> 639 ms and suite-wide in-timed JIT
     // 79.5 -> 50-60 s; the sf0.01 stage targets the remainder. All
     // warm cost is outside the timed region.
+    // Each query's first run also pays its one-off first-use costs
+    // (Janino compilation per plan SHAPE, classloading of the
+    // machinery it touches — broadcast, Generate, sinks, custom
+    // operators); the first sf0.001 pass absorbs them for every
+    // selected key, so no hand-written machinery tour is needed.
     // Env override: SPARK_GRAFT_WARM="dir[:passes],dir[:passes],…".
-    // The pre-r11 single-stage knobs (SPARK_GRAFT_WARM_DIR /
-    // SPARK_GRAFT_WARM_PASSES) stay honored when the schedule env is
-    // absent — a harness still setting them gets exactly the stage it
-    // asked for (no surprise extra sf0.01 stage), not a silently
-    // ignored knob.
-    val warmSchedule: Seq[(String, Int)] = sys.env.get("SPARK_GRAFT_WARM")
-      .map(HarnessConf.parseWarmSchedule)
-      .orElse {
-        val legacyDir = sys.env.get("SPARK_GRAFT_WARM_DIR")
-        val legacyPasses = sys.env.get("SPARK_GRAFT_WARM_PASSES")
-        if (legacyDir.isEmpty && legacyPasses.isEmpty) None
-        else Some(Seq((legacyDir.getOrElse("/root/testdata/sf0.001"),
-          legacyPasses.getOrElse("3").toInt)))
-      }
-      .getOrElse(HarnessConf.parseWarmSchedule(
-        // Default trimmed 3→2 sf0.001 passes (r18-opt): at 483 keys
-        // the three passes alone took 624 s — past the whole warm
-        // budget — so the sf0.01 stage (the one that pushes heavy
-        // generated loops over the C2 threshold) was silently
-        // skipped and 1-3 s of compiler time landed back inside each
-        // heavy key's timed region (measured: graph_label_propagation
-        // jit_ms=2886 in-region). Two sf0.001 passes + the sf0.01
-        // pass fit the budget and drain C2 where it matters.
-        "/root/testdata/sf0.001:2,/root/testdata/sf0.01:1"))
+    val warmSchedule: Seq[(String, Int)] = HarnessConf.parseWarmSchedule(
+      sys.env.getOrElse("SPARK_GRAFT_WARM", HarnessConf.DefaultWarm))
     // Wall budget over the WHOLE warm phase (env override, seconds):
     // on a badly contended host the multi-pass warm could balloon,
     // and a harness that kills a still-warming Bench leaves NO
@@ -292,16 +128,7 @@ object Bench {
     // measures it. stderr only (one line per query): the artifact
     // keeps its compact schema, a human diagnosing a slow run reads
     // the diag column next to the timing.
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    def jitMs: Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else 0L
-    }
+    import HarnessConf.{gcMs, jitMs}
     // failures must be LOUD: a query that throws after 0.1 s would
     // otherwise be recorded as a fast success and make the shipped
     // total look better — the same misrepresentation the full-run
@@ -349,8 +176,10 @@ object Bench {
     // host-shift attribution: ratio_median ≈ 1 says "same host floor",
     // a uniform 1.4 says "slower window", and a single outlier query
     // against a ~1 median is a real plan/noise event worth chasing.
-    // -1.0 when HEAD has no artifact or no keys are shared.
-    val committedMap: Map[String, Double] = try {
+    // -1.0 when HEAD has no artifact, no keys are shared, or the
+    // artifact was measured at another core count or has no "cores"
+    // field (HarnessConf.ratioMedianAt).
+    val (committedTxt, committedMap): (String, Map[String, Double]) = try {
       val p = new ProcessBuilder("git", "show", "HEAD:BENCH_full.json")
         .redirectErrorStream(false).start()
       val txt = new String(p.getInputStream.readAllBytes, "UTF-8")
@@ -358,12 +187,11 @@ object Bench {
       // not host-shift attribution — it's the data-size ratio wearing
       // the attribution field's name. Guard on the committed line's
       // sf field (absent in very old artifacts → guard fails → -1).
-      if (p.waitFor() != 0 || !txt.contains(s""""sf":"$sfDir"""")) Map.empty
-      else HarnessConf.parseBenchQueries(txt)
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      if (p.waitFor() != 0 || !txt.contains(s""""sf":"$sfDir"""")) ("", Map.empty)
+      else (txt, HarnessConf.parseBenchQueries(txt))
+    } catch { case scala.util.control.NonFatal(_) => ("", Map.empty) }
     val ratioMedian: Double =
-      if (committedMap.isEmpty) -1.0
-      else HarnessConf.ratioMedian(results, committedMap)
+      HarnessConf.ratioMedianAt(results, committedMap, committedTxt, cpus)
     // Burst-resilience second-chance pass (r14, VERDICT r13 item 1):
     // a mid-run external contention burst (r13 shipped a 3.24x
     // minhash_est_audit inside an alphabetically-contiguous l→m
@@ -425,7 +253,7 @@ object Bench {
     // says "vs what the driver itself measured last round". The driver
     // artifact holds only the 25 slowest keys, so this is a
     // top-of-the-cost-curve statistic by construction. -1.0 when no
-    // artifact, different sf, or no shared keys.
+    // artifact, different sf or core count, or no shared keys.
     val ratioMedianPrev: Double = try {
       // numeric round sort, not lexicographic (ADVICE r13): by name,
       // BENCH_r9.json sorts after BENCH_r13.json and the comparison
@@ -438,7 +266,8 @@ object Bench {
       arts.lastOption.map { f =>
         val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         if (!txt.contains(sfDir)) -1.0
-        else HarnessConf.ratioMedian(results, HarnessConf.parseBenchQueriesLoose(txt))
+        else HarnessConf.ratioMedianAt(results,
+          HarnessConf.parseBenchQueriesLoose(txt), txt, cpus)
       }.getOrElse(-1.0)
     } catch { case scala.util.control.NonFatal(_) => -1.0 }
     val loadJson = s""","load_start":${r3(loadStart)},"load_end":${r3(loadEnd)}""" +
@@ -461,7 +290,7 @@ object Bench {
         case (k, f, s2) => "\"" + k + "\":[" + r3(f) + "," + r3(s2) + "]"
       }.mkString(""","retimed_n":""" + retimed.size + ""","retimed":{""", ",", "}")
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":${qjson(slowest)}$failedJson$loadJson$retimedCompact,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":${qjson(slowest)}$failedJson$loadJson$retimedCompact,"cores":$cpus,"sf":"$sfDir"}"""
     // Against sbt's [info]/[success] wrapping defeating the driver's
     // stdout parser (parsed=null in rounds 1+2): emit the bare line
     // ONCE on stdout AFTER spark.stop() (so it is the true last
@@ -481,7 +310,7 @@ object Bench {
     if (args.isEmpty) {
       writeFile("BENCH.json", line)
       writeFile("BENCH_full.json",
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":${qjson(published.sortBy(_._1))}$failedJson$loadJson$retimedJson,"sf":"$sfDir"}""")
+        s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":${qjson(published.sortBy(_._1))}$failedJson$loadJson$retimedJson,"cores":$cpus,"sf":"$sfDir"}""")
     }
     System.err.println(line)
     spark.stop()

@@ -1,19 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The at-scale session profile (r13, VERDICT r12 item 5) — the
   * 100-TB playbook's prose (PLANS.md "Config posture") as one
   * machine-readable conf set, selectable by `SPARK_GRAFT_CONF=cluster`
-  * in every driver main (Bench / Verify / Explain share the expansion
-  * through [[HarnessConf]]).
+  * in every main that builds its session through
+  * [[HarnessConf.session]] (Bench / Verify / Explain and the dev
+  * tools).
   *
   * Two regimes, one codebase:
   *
-  *  - **Bench tier (default, no env)**: AQE off (measured r5: 50–200 ms
-  *    of driver replanning per query-stage barrier at MB scale),
-  *    shuffle.partitions=32 with per-key presizing (PartitionPolicy),
-  *    64m broadcast threshold on the single 128 GiB host.
+  *  - **Bench tier (default, no env)**: [[HarnessConf.regime]] — AQE
+  *    off (measured r5: 50–200 ms of replanning per query-stage
+  *    barrier at MB scale), shuffle.partitions = cores
+  *    with per-key presizing (PartitionPolicy), 64m broadcast
+  *    threshold on a single host. Bench times it, and Verify's hash
+  *    gate and Explain's plan dumps run under the same regime.
   *  - **Cluster profile (this object)**: what the same library ships
   *    with on a multi-executor cluster, where every one of those
   *    trade-offs flips — barriers amortize over seconds-long stages,
@@ -23,10 +24,11 @@ import org.apache.spark.sql.SparkSession
   * The graded plans must NOT depend on the regime: broadcasts and
   * partitioning are explicit in the operator code, AQE only re-splits
   * and coalesces. `ClusterProfileSpec` executes every registered
-  * query under both regimes and asserts identical results, and the
-  * hash gate can run fully under the profile via
+  * query under both regimes and asserts identical results — that
+  * spec, plus running the hash gate fully under the profile via
   * `SPARK_GRAFT_CONF=cluster runMain graft.Verify …` (PLANS.md r13
-  * log records the sf0.1 preflight under the profile).
+  * log records the sf0.1 preflight under the profile), is what keeps
+  * the AQE-on regime covered now that Verify defaults to AQE off.
   *
   * Every entry is a session-level `spark.sql.*` conf on purpose: the
   * profile can be applied to a `SparkSession.newSession()` without a
@@ -67,10 +69,4 @@ object ClusterProfile {
 
   /** The profile as a SPARK_GRAFT_CONF-syntax string. */
   def conf: String = entries.map { case (k, v) => s"$k=$v" }.mkString(",")
-
-  /** Apply to a builder (driver mains) — same entries, one source. */
-  def apply(builder: SparkSession.Builder): SparkSession.Builder = {
-    entries.foreach { case (k, v) => builder.config(k, v) }
-    builder
-  }
 }

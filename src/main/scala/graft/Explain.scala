@@ -9,15 +9,9 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = HarnessConf.applyEnv(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the bench's session regime (HarnessConf.session), so the printed
+    // plans are the ones the timed runs execute
+    val spark = HarnessConf.session(HarnessConf.cpus)
     val keys = if (args.nonEmpty) args.toSet else SparkEntry.queries.keySet
     run(spark, keys, sfDir)
     spark.stop()
@@ -31,9 +25,7 @@ object Explain {
     // the ones the timed runs actually execute — under a sweep too
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     SparkEntry.defs.filter(d => keys.contains(d.key)).foreach { d =>
-      if (HarnessConf.policyActive)
-        spark.conf.set("spark.sql.shuffle.partitions",
-          PartitionPolicy.forKey(d.key, sessionParts).toString)
+      HarnessConf.applyPolicy(spark, d.key, sessionParts)
       println(s"\n======== ${d.key} ========")
       d.run(spark, sfDir).explain("formatted")
     }

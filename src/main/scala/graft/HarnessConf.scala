@@ -2,31 +2,40 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared harness-session configuration for the three driver mains
-  * (Bench / Verify / Explain).
+/** The one harness session regime, shared by every main that builds a
+  * session: the graded mains (Bench / Verify / Explain) and the dev
+  * tools (KeyTime / PlanSizeSurvey / PlanDump).
   *
-  * The drivers must agree on BOTH halves of the session-conf story,
-  * or the hash gate and plan dumps certify different plans than the
-  * bench times (ADVICE r7 — Bench honored the sweep hook, Verify and
-  * Explain did not):
+  * The mains must agree on the whole session conf, or the hash gate
+  * and the plan dumps certify different plans than the bench times
+  * (before this object built every session, Verify and Explain ran
+  * with AQE on while Bench ran with it off). So the regime is set
+  * ONCE, in [[regime]], and every main gets its session from
+  * [[session]]:
   *
-  *  - `SPARK_GRAFT_CONF="k=v,k=v"` overrides any session conf — the
-  *    experiment hook for global sweeps. Comma is the entry
-  *    separator, so list-valued confs can't be set here; a segment
-  *    without '=' fails loudly instead of a MatchError.
-  *  - The per-key PartitionPolicy presizing is DISABLED whenever that
-  *    env pins `spark.sql.shuffle.partitions`: a global sweep is
-  *    exactly the experiment the per-key policy would silently
-  *    defeat.
+  *  - `local[cpus]`, `shuffle.partitions = cpus` (cpus from
+  *    `SPARK_GRAFT_CPUS`, see [[cpus]]), AQE off, a 64m broadcast
+  *    threshold, UTC, `graft.GraftExtensions`, a temp warehouse, UI
+  *    off. The AQE-on regime stays covered by `ClusterProfileSpec`
+  *    and by `SPARK_GRAFT_CONF=cluster` ([[ClusterProfile]]).
+  *  - `SPARK_GRAFT_CONF="k=v,k=v"` overrides any of those, applied
+  *    last — the experiment hook for global sweeps. Comma is the
+  *    entry separator, so list-valued confs can't be set here; a
+  *    segment without '=' fails loudly instead of a MatchError.
+  *  - The per-key PartitionPolicy presizing ([[applyPolicy]]) is
+  *    DISABLED whenever that env pins `spark.sql.shuffle.partitions`:
+  *    a global sweep is exactly the experiment the per-key policy
+  *    would silently defeat.
   */
 object HarnessConf {
 
   /** SPARK_GRAFT_CONF parsed into (key, value) entries — ONE parse
-    * shared by applyEnv and policyActive, so the conf a sweep sets
-    * and the conf the policy gate tests are the same string split the
-    * same way (ADVICE r8: the old substring `contains` let a VALUE
-    * mentioning the partitions key, or a longer key with it as a
-    * prefix, disable the policy without pinning anything). */
+    * shared by the session overrides and policyActive, so the conf a
+    * sweep sets and the conf the policy gate tests are the same
+    * string split the same way (ADVICE r8: the old substring
+    * `contains` let a VALUE mentioning the partitions key, or a longer
+    * key with it as a prefix, disable the policy without pinning
+    * anything). */
   private[graft] def parseEntries(conf: String): Seq[(String, String)] =
     conf.split(',').toSeq.map { kv =>
       kv.split("=", 2) match {
@@ -43,24 +52,94 @@ object HarnessConf {
   private[graft] def expand(conf: String): String =
     if (conf.trim == "cluster") ClusterProfile.conf else conf
 
-  private def envEntries: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq.map(expand).flatMap(parseEntries)
+  private def overrides(env: Option[String]): Seq[(String, String)] =
+    env.toSeq.map(expand).flatMap(parseEntries)
 
-  /** Apply the SPARK_GRAFT_CONF overrides to a session builder. */
-  def applyEnv(builder: SparkSession.Builder): SparkSession.Builder = {
-    envEntries.foreach { case (k, v) => builder.config(k, v) }
-    builder
+  private def envConf: Option[String] = sys.env.get("SPARK_GRAFT_CONF")
+
+  /** Executor threads and static shuffle width of every harness
+    * session (`SPARK_GRAFT_CPUS`, default 32). */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The harness regime's session confs for `cpus` cores, with the
+    * `env` (SPARK_GRAFT_CONF syntax) overrides appended — later
+    * entries win. Pure, so the regime is unit-testable without a
+    * session. */
+  private[graft] def regime(cpus: Int, env: Option[String]): Seq[(String, String)] =
+    Seq(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      // AQE OFF — measured, not guessed: each AQE query-stage barrier
+      // costs 50-200 ms of replanning, and at the bench's MB
+      // scale that overhead dominates (113-query total 86.5 s ->
+      // 78.4 s when disabled; dedup_cluster_cc's 15-stage iterative
+      // plan alone 7.2 s -> 5.3 s). At TB scale flip it ON
+      // (SPARK_GRAFT_CONF=cluster). The results don't depend on it —
+      // broadcasts and partitioning are explicit in every graded
+      // query, which ClusterProfileSpec checks key by key.
+      "spark.sql.adaptive.enabled" -> "false",
+      // Deployment tuning for this host class (single node): let the
+      // planner broadcast mid-size join sides; at cluster scale this
+      // knob is sized per-executor instead.
+      "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+      // the events reader's TimestampNTZ cast is session-tz-dependent,
+      // so an unpinned session on a non-UTC host would run different
+      // session/window/date_trunc groupings (ADVICE r10)
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.ui.enabled" -> "false",
+    ) ++ overrides(env)
+
+  /** The harness session for `cpus` cores: [[regime]] with the
+    * process's SPARK_GRAFT_CONF overrides, over a temp warehouse. */
+  def session(cpus: Int): SparkSession = {
+    val b = SparkSession.builder()
+      .config("spark.sql.warehouse.dir", TempDirs.create("graft-warehouse"))
+    regime(cpus, envConf).foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
-  /** Is the per-key shuffle presizing in force for this process? One
-    * definition, so Bench (timing), Verify (hash gate), and Explain
-    * (plan dumps) always flip together. Key EQUALITY against the
-    * parsed entries — exactly the keys applyEnv would set. */
-  def policyActive: Boolean = policyActiveFor(sys.env.get("SPARK_GRAFT_CONF"))
+  /** Is the per-key shuffle presizing in force for this process? Key
+    * EQUALITY against the parsed entries — exactly the keys the
+    * session overrides set. */
+  def policyActive: Boolean = policyActiveFor(envConf)
 
   private[graft] def policyActiveFor(conf: Option[String]): Boolean =
-    !conf.toSeq.map(expand).flatMap(parseEntries)
-      .exists(_._1 == "spark.sql.shuffle.partitions")
+    !overrides(conf).exists(_._1 == "spark.sql.shuffle.partitions")
+
+  /** Presize `key`'s shuffle width (PartitionPolicy) on the session
+    * before running it, unless a sweep pins the width. One copy, so
+    * Bench (timing), Verify (hash gate), Explain (plan dumps) and
+    * KeyTime always run the same per-key plan. `sessionParts` is the
+    * session's static width, read once before the first key. */
+  def applyPolicy(spark: SparkSession, key: String, sessionParts: Int): Unit =
+    if (policyActive)
+      spark.conf.set("spark.sql.shuffle.partitions",
+        PartitionPolicy.forKey(key, sessionParts).toString)
+
+  /** Bench's default warm schedule (r18-opt: 3→2 sf0.001 passes): two
+    * sf0.001 passes compile every Janino class and one sf0.01 pass
+    * pushes the heavy generated loops over the C2 threshold, inside
+    * the default warm budget at 483 keys. KeyTime warms with the same
+    * schedule. Override with SPARK_GRAFT_WARM. */
+  val DefaultWarm = "/root/testdata/sf0.001:2,/root/testdata/sf0.01:1"
+
+  /** Cumulative GC time of this JVM, ms — bracketed around a timed
+    * region, the GC debt that landed inside it. */
+  def gcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+  }
+
+  /** Cumulative JIT compiler time of this JVM, ms (0 if unsupported). */
+  def jitMs: Long = {
+    val c = java.lang.management.ManagementFactory.getCompilationMXBean
+    if (c != null && c.isCompilationTimeMonitoringSupported)
+      c.getTotalCompilationTime else 0L
+  }
 
   /** 1-minute host load average from /proc/loadavg (-1.0 if
     * unreadable). Bench records it as JSON fields, Verify on stderr —
@@ -173,6 +252,24 @@ object HarnessConf {
     else if (ratios.size % 2 == 1) ratios(ratios.size / 2)
     else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2.0
   }
+
+  /** Core count a Bench artifact was measured at: our own `"cores"`
+    * field, or the `"cpus"` field of the wrapped round artifacts
+    * (BENCH_r*.json; whitespace-tolerant, since those are
+    * re-serialized, and the escaped copies inside their "tail" string
+    * never match). None if absent. */
+  private[graft] def artifactCores(txt: String): Option[Int] =
+    """"(?:cores|cpus)"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+
+  /** [[ratioMedian]] against an artifact, refused (-1.0) unless the
+    * artifact was measured at the same core count: a ratio between a
+    * 32-core and an 8-core run is the scaling curve wearing the
+    * host-shift attribution field's name (the same reasoning as the
+    * scale-factor guard). A missing field refuses too. */
+  private[graft] def ratioMedianAt(current: Seq[(String, Double)],
+      committed: Map[String, Double], artifact: String, cores: Int): Double =
+    if (artifactCores(artifact) != Some(cores)) -1.0
+    else ratioMedian(current, committed)
 
   /** Burst-outlier selection for Bench's second-chance pass (r14,
     * VERDICT r13 item 1) — pure so the policy is unit-testable: a key

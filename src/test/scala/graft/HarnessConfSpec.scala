@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SPARK_GRAFT_CONF parse is the gate that disables the per-key
+/** The harness regime every main's session is built from, and the
+  * SPARK_GRAFT_CONF parse that overrides it and gates the per-key
   * PartitionPolicy during global sweeps — a false positive silently
   * un-presizes every bench query, a false negative silently defeats
   * the sweep (ADVICE r8: the old substring test had both failure
@@ -10,6 +11,55 @@ import org.scalatest.funsuite.AnyFunSuite
 class HarnessConfSpec extends AnyFunSuite {
 
   private val P = "spark.sql.shuffle.partitions"
+
+  test("the harness regime: AQE off, UTC, graft extensions, 64m, width = cores") {
+    // one regime for Bench, Verify, Explain and the dev tools — the
+    // hash gate certifies the plans the bench times
+    for (cpus <- Seq(4, 32)) {
+      val conf = HarnessConf.regime(cpus, None).toMap
+      assert(conf("spark.master") == s"local[$cpus]")
+      assert(conf(P) == cpus.toString)
+      assert(conf("spark.sql.adaptive.enabled") == "false")
+      assert(conf("spark.sql.session.timeZone") == "UTC")
+      assert(conf("spark.sql.extensions") == "graft.GraftExtensions")
+      assert(conf("spark.sql.autoBroadcastJoinThreshold") == "64m")
+      assert(conf("spark.ui.enabled") == "false")
+    }
+  }
+
+  test("SPARK_GRAFT_CONF entries override regime entries (applied last)") {
+    val conf = HarnessConf.regime(8,
+      Some("spark.sql.adaptive.enabled=true,spark.x=1")).toMap
+    assert(conf("spark.sql.adaptive.enabled") == "true")
+    assert(conf("spark.x") == "1")
+    assert(conf(P) == "8")
+    // the cluster alias expands to the whole profile, over the regime
+    val cluster = HarnessConf.regime(8, Some("cluster")).toMap
+    ClusterProfile.entries.foreach { case (k, v) => assert(cluster(k) == v, k) }
+  }
+
+  test("the default warm schedule parses: two sf0.001 passes, one sf0.01") {
+    assert(HarnessConf.parseWarmSchedule(HarnessConf.DefaultWarm).map {
+      case (d, n) => (d.split('/').last, n) } == Seq(("sf0.001", 2), ("sf0.01", 1)))
+  }
+
+  test("cores guard: a ratio only against an artifact measured at the same core count") {
+    val committed = Map("a" -> 1.0, "b" -> 2.0)
+    val current = Seq("a" -> 2.0, "b" -> 4.0)
+    val own = """{"metric":"total","queries":{"a":1.000,"b":2.000},"cores":8,"sf":"/x"}"""
+    assert(HarnessConf.ratioMedianAt(current, committed, own, 8) == 2.0)
+    assert(HarnessConf.ratioMedianAt(current, committed, own, 32) == -1.0)
+    // a missing field refuses, like the sf guard on old artifacts
+    val old = """{"metric":"total","queries":{"a":1.000,"b":2.000},"sf":"/x"}"""
+    assert(HarnessConf.artifactCores(old).isEmpty)
+    assert(HarnessConf.ratioMedianAt(current, committed, old, 8) == -1.0)
+    // the wrapped round artifacts (BENCH_r*.json) name it "cpus",
+    // with spaces; an escaped copy inside "tail" must not match
+    val wrapped = """{"n": 19, "tail": "x \"cores\":4 y", "cpus": 8, "parsed": {}}"""
+    assert(HarnessConf.artifactCores(wrapped) == Some(8))
+    assert(HarnessConf.ratioMedianAt(current, committed, wrapped, 8) == 2.0)
+    assert(HarnessConf.ratioMedianAt(current, committed, wrapped, 4) == -1.0)
+  }
 
   test("pinning the partitions key disables the policy") {
     assert(!HarnessConf.policyActiveFor(Some(s"$P=64")))

@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only registry survey (test sourceset — never ships): print
   * every graded key's executed-plan text size and paid-shuffle count
-  * at sf0.001 with AQE off. Plan text size is a cheap proxy for
+  * at sf0.001 in the bench regime (HarnessConf.session, per-key
+  * PartitionPolicy). Plan text size is a cheap proxy for
   * generated-code volume, i.e. for the per-key C2 JIT a cold bench
   * run pays inside its timed region — the order_rfm_segments r19
   * rewrite (381 KB → 53 KB plan) came out of exactly this ranking.
@@ -13,18 +12,11 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanSizeSurvey {
   def main(args: Array[String]): Unit = {
-    val spark = graft.HarnessConf.applyEnv(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", graft.TempDirs.create("graft-warehouse"))
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.HarnessConf.session(graft.HarnessConf.cpus)
     val sf = graft.StaticPlans.sfStatic
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     graft.SparkEntry.queries.keySet.toSeq.sorted.foreach { k =>
+      graft.HarnessConf.applyPolicy(spark, k, sessionParts)
       try {
         val qe = graft.SparkEntry.queries(k)(spark, sf).queryExecution
         val ep = qe.executedPlan
